@@ -255,8 +255,14 @@ final class IceliteTable private (
         df.withColumn("_lww_rn", row_number().over(w)).filter(col("_lww_rn") === 1).drop("_lww_rn")
       case None => df.dropDuplicates(keyCols)
     }
-    commitWrite(deduped, deleteKeys = Some(deduped.select(keyCols.map(col): _*)),
+    // the commit reads the batch twice (data write + delete-key write,
+    // the keys a projection of the same deduped plan): cache it for the
+    // commit's duration so the dedup shuffle runs once, not once per
+    // write (and once more per optimistic retry)
+    deduped.persist()
+    try commitWrite(deduped, deleteKeys = Some(deduped.select(keyCols.map(col): _*)),
       keyCols = keyCols, operation = "upsert", summary = summary)
+    finally deduped.unpersist()
   }
 
   /** Commit files the CALLER writes (Iceberg's own commit surface: the
@@ -432,11 +438,14 @@ final class IceliteTable private (
     * key in `deleteKeys` (upserted AND deleted keys) + data file with
     * the final upsert images — the reference's "write delete files,
     * write data file, commit both in one Iceberg txn" steady-state step.
-    * Callers must pass `upserts` already deduplicated per key.
+    * Callers must pass `upserts` and `deleteKeys` each already
+    * deduplicated per key (a change batch is resolved per key before
+    * it gets here). Each frame is read once and not persisted: a
+    * caller that derives both from an expensive plan caches it itself,
+    * as the change-stream resolve pass does.
     */
   def applyChanges(upserts: DataFrame, deleteKeys: DataFrame, keyCols: Seq[String]): Long =
-    commitWrite(upserts,
-      deleteKeys = Some(deleteKeys.select(keyCols.map(col): _*).dropDuplicates(keyCols)),
+    commitWrite(upserts, deleteKeys = Some(deleteKeys.select(keyCols.map(col): _*)),
       keyCols = keyCols, operation = "upsert")
 
   /** General MERGE (the Delta / Iceberg `MERGE INTO` shape): classify
@@ -796,23 +805,7 @@ final class IceliteTable private (
       deleteKeys: Option[DataFrame],
       keyCols: Seq[String],
       operation: String,
-      summary: Long => Map[String, String] = _ => Map.empty): Long = {
-    // the upsert/applyChanges shape reads the batch twice (data write +
-    // delete-key write, the keys a projection of the same deduped plan):
-    // cache it for the commit's duration so the dedup shuffle runs once,
-    // not once per write (and once more per optimistic retry)
-    val cacheBatch = df != null && deleteKeys.isDefined
-    if (cacheBatch) df.persist()
-    try commitWriteInner(df, deleteKeys, keyCols, operation, summary)
-    finally if (cacheBatch) df.unpersist()
-  }
-
-  private def commitWriteInner(
-      df: DataFrame,
-      deleteKeys: Option[DataFrame],
-      keyCols: Seq[String],
-      operation: String,
-      summary: Long => Map[String, String]): Long = retryCommit { head =>
+      summary: Long => Map[String, String] = _ => Map.empty): Long = retryCommit { head =>
     if (operation != "delete") requireLineageSafe(head, operation)
     val seq = head.lastSeq + 1
     val commitId = UUID.randomUUID().toString

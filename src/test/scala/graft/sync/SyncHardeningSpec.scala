@@ -18,6 +18,13 @@ import graft.table.IceliteTable
   */
 class SyncHardeningSpec extends AnyFunSuite with SparkFixture {
 
+  /** Spark jobs one clean micro-batch runs: four for the resolve pass
+    * (the key aggregate's shuffle, the cache build, and the statistics
+    * aggregate's two stages), then the data and delete-key writes of
+    * its commit.
+    */
+  private val MaxJobsPerBatch = 6
+
   private def oid(i: Int): String = f"65f1a2b3c4d5e6f7a8b9c$i%03x"
 
   private def writeFixture(root: Path, db: String, coll: String, docs: Seq[String]): Unit = {
@@ -155,6 +162,71 @@ class SyncHardeningSpec extends AnyFunSuite with SparkFixture {
     assert(t2.schema.fieldNames.contains("loyalty_points"))
     assert(t2.read().filter(col("_id") === oid(2))
       .select("loyalty_points").collect().head.getLong(0) == 42L)
+  }
+
+  /** N change events over 1..6 with repeated keys, a delete and a
+    * re-insert, split over three change files; no novel key.
+    */
+  private def singlePassFixture(root: Path): Int = {
+    def ins(seq: Int, i: Int, tier: String): String =
+      s"""{"seq":$seq,"op":"insert","_id":"${oid(i)}","fullDocument":${jstr(doc(i, s"$seq.00", tier))},"clusterTime":"2024-02-01T00:00:00.000Z"}"""
+    def del(seq: Int, i: Int): String =
+      s"""{"seq":$seq,"op":"delete","_id":"${oid(i)}","fullDocument":null,"clusterTime":"2024-02-01T00:00:00.000Z"}"""
+    val files = Seq(
+      Seq(upd(1, 1, "1.11", "plat"), upd(2, 2, "2.22", "plat"), del(3, 3)),
+      Seq(upd(4, 1, "1.44", "silver"), ins(5, 3, "bronze"), upd(6, 4, "4.66", "plat")),
+      Seq(del(7, 5), upd(8, 1, "1.88", "diamond"), ins(9, 7, "gold")))
+    files.zipWithIndex.foreach { case (ev, i) => writeChanges(root, "shop", "orders", s"b$i", ev) }
+    files.map(_.size).sum
+  }
+
+  test("single pass: an availableNow drain scans each change event once") {
+    val root = Files.createTempDirectory("sync-1p")
+    val wh = Files.createTempDirectory("sync-wh").toString
+    val cfg = config(root, wh)
+    val c = cfg.sync.collections.head
+    writeFixture(root, "shop", "orders", (1 to 6).map(i => doc(i, s"$i.00", "gold")))
+    val orch = new SyncOrchestrator(spark, cfg, wh)
+    val table = orch.syncCollection(c, Files.createTempDirectory("ck").toString)
+    val n = singlePassFixture(root)
+    val q = new ChangeStreamSync(spark, c, table, orch.checkpoints, "shop").start(
+      root.resolve("shop").resolve("orders.changes").toString,
+      Files.createTempDirectory("ck").toString, availableNow = true)
+    q.awaitTermination()
+    val rows = q.recentProgress.map(_.numInputRows).sum
+    info(s"numInputRows over the drain: $rows for $n events")
+    assert(rows == n, s"the drain read $rows rows for $n logged events")
+    assert(tierOf(table, 1) == "diamond" && tierOf(table, 3) == "bronze" && tierOf(table, 7) == "gold")
+    assert(table.read().count() == 6) // 1..6 + 7 - 5
+    assert(orch.checkpoints.read("analytics.orders").get.resumeToken.contains(9L))
+  }
+
+  test("single pass: one processBatch call runs a bounded number of Spark jobs") {
+    val root = Files.createTempDirectory("sync-jobs")
+    val wh = Files.createTempDirectory("sync-wh").toString
+    val cfg = config(root, wh)
+    val c = cfg.sync.collections.head
+    writeFixture(root, "shop", "orders", (1 to 6).map(i => doc(i, s"$i.00", "gold")))
+    val orch = new SyncOrchestrator(spark, cfg, wh)
+    val table = orch.syncCollection(c, Files.createTempDirectory("ck").toString)
+    singlePassFixture(root)
+    val batch = spark.read.schema(ChangeStreamSync.EventSchema)
+      .json(root.resolve("shop").resolve("orders.changes").toString)
+    val cs = new ChangeStreamSync(spark, c, table, orch.checkpoints, "shop")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerFlush.flush(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      cs.processBatch(batch, batchId = 0)
+      org.apache.spark.graft.ListenerFlush.flush(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    info(s"Spark jobs in one processBatch: ${jobs.get}")
+    assert(jobs.get <= MaxJobsPerBatch, s"${jobs.get} jobs for one micro-batch")
+    assert(tierOf(table, 1) == "diamond" && table.read().count() == 6)
   }
 
   test("concurrent syncAll: collections sync in parallel with independent checkpoints") {
